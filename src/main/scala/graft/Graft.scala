@@ -4,7 +4,7 @@ import java.util.concurrent.atomic.AtomicBoolean
 
 import scala.collection.concurrent.TrieMap
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.engine._
 import graft.model._
@@ -37,6 +37,15 @@ import graft.transform._
   * `connectors` maps a task spec to its (source, sink) connector pair;
   * the default is the parquet layout rooted at the spec's directories,
   * and tests plug an in-memory mock (the worker-E2E seam).
+  *
+  * Read budget: [[addTask]] calls `source.scan` once per planned table
+  * and keeps that frame; every subtask of the table filters the same
+  * frame, so [[runTask]] never calls `source.scan`. A kept frame is a
+  * SNAPSHOT — the parquet file listing and the inferred JSON schema are
+  * fixed at plan time, as are the subtask counts planned from it. To
+  * pick up source changes (new files, new columns), re-add the task:
+  * the replan (the resume path) scans again and replaces the frames.
+  * Frames are dropped once the task's backlog drains to empty.
   */
 final class Graft(
     val spark: SparkSession,
@@ -52,8 +61,8 @@ final class Graft(
       spec: TaskSpec,
       pipeline: Transfer.Pipeline,
       sizeCols: Map[String, String],
-      source: DocConnector,
       sink: DocConnector,
+      var frames: Map[String, DataFrame],
       var backlog: Seq[SubtaskSpec],
       var completed: Set[String],
       progress: TrieMap[String, Progress],
@@ -129,14 +138,18 @@ final class Graft(
       storedFilters.filter(_.kind == StoredFilter.Index).map(_.indexPred)
     val typePreds = storedFilters.filter(_.kind == StoredFilter.Type).map(_.typePred)
     val configs = spec.tables.map(t => IndexConfig(t))
+    // the planner scans each kept table once; its frames serve the
+    // subtasks too (the snapshot rule in the class doc)
+    var frames = Map.empty[String, DataFrame]
     val potential = Planner.expand(
-      spark, spec, sizeCols, configs, allIndexPreds, buckets, (s, t) => source.scan(s, t))
+      spark, spec, sizeCols, configs, allIndexPreds, buckets,
+      (s, t) => { val df = source.scan(s, t); frames += t -> df; df })
     val prior = Option(tasks.get(spec.name)).map(_.completed).getOrElse(Set.empty[String])
     val backlog = Planner.buildBacklog(potential, prior)
     val priorProgress = Option(tasks.get(spec.name)).map(_.progress)
       .getOrElse(TrieMap.empty[String, Progress])
     tasks.put(spec.name,
-      TaskState(spec, pipeline, sizeCols, source, sink, backlog, prior, priorProgress,
+      TaskState(spec, pipeline, sizeCols, sink, frames, backlog, prior, priorProgress,
         typePreds))
     backlog
   }
@@ -190,13 +203,13 @@ final class Graft(
       throw new IllegalStateException(s"task '$name' is already running")
     spark.sparkContext.setJobGroup(group, s"graft task $name", interruptOnCancel = true)
     try {
-      val queue = st.synchronized(st.backlog)
+      val (queue, frames) = st.synchronized((st.backlog, st.frames))
       val results = queue.flatMap { sub =>
         if (!runFlag.get) None
         else
           try {
             val r = Transfer.transferSubtask(
-              spark, st.source, st.sink, sub, st.sizeCols.get(sub.table), st.pipeline,
+              frames(sub.table), st.sink, sub, st.sizeCols.get(sub.table), st.pipeline,
               worker = worker,
               onProgress = p => {
                 st.progress.put(sub.subtaskId, p)
@@ -218,6 +231,7 @@ final class Graft(
       }
       st.synchronized {
         st.backlog = st.backlog.filterNot(s => st.completed.contains(s.subtaskId))
+        if (st.backlog.isEmpty) st.frames = Map.empty
       }
       results
     } finally {

@@ -5,6 +5,7 @@ import java.nio.charset.StandardCharsets
 import java.util.concurrent.{ConcurrentHashMap, Executors, ThreadFactory}
 
 import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
@@ -265,7 +266,9 @@ final class HttpApi(g: Graft, port: Int = 0, apiKey: Option[String] = None) {
       // residue, not run history — don't resurrect it after success
       cur.filter(s => s.state != "plan_failed")
     }
-    runExec.submit(new Runnable {
+    // execute, not submit: a rethrown fatal error must reach the
+    // thread's uncaught-exception handler, not die in an unread Future
+    runExec.execute(new Runnable {
       def run(): Unit =
         try {
           g.addTask(spec, sizeCols)
@@ -299,6 +302,8 @@ final class HttpApi(g: Graft, port: Int = 0, apiKey: Option[String] = None) {
               }
               else runs.put(id, RunSummary("plan_failed", 0, 0L, Some(e.toString)))
             }
+            // the poll target is recorded; a fatal JVM error still propagates
+            if (!NonFatal(e)) throw e
         }
     })
     json(ex, 202, Map("state" -> "planning"))
@@ -323,13 +328,15 @@ final class HttpApi(g: Graft, port: Int = 0, apiKey: Option[String] = None) {
       }
     }
     if (!claimed) { json(ex, 409, Map("error" -> s"task '$id' is already running")); return }
-    runExec.submit(new Runnable {
+    runExec.execute(new Runnable {
       def run(): Unit =
         try {
           val results = g.runTask(id)
           runs.put(id, RunSummary("done", results.size, results.map(_.rowsWritten).sum, None))
         } catch {
-          case e: Throwable => runs.put(id, RunSummary("failed", 0, 0L, Some(e.toString)))
+          case e: Throwable =>
+            runs.put(id, RunSummary("failed", 0, 0L, Some(e.toString)))
+            if (!NonFatal(e)) throw e
         }
     })
     json(ex, 202, Map("state" -> "running"))

@@ -120,15 +120,15 @@ object Transfer {
     TableResult(subtask.subtaskId, written, dest)
   }
 
-  /** Connector-based subtask transfer: scan from `source`, bulk into
-    * `sink` under `<table>/<subtaskDir>`, and report a per-subtask
-    * [[graft.model.Progress]] record (`progress.js:6-32` — the
-    * reference emits one per flush; a Spark slice is one atomic bulk,
-    * so tick == transferred).
+  /** Connector-based subtask transfer: filter the table's planned
+    * frame (scanned once, for [[Planner.expand]]) to the subtask's size
+    * range, bulk into `sink` under `<table>/<subtaskDir>`, and report a
+    * per-subtask [[graft.model.Progress]] record (`progress.js:6-32` —
+    * the reference emits one per flush; a Spark slice is one atomic
+    * bulk, so tick == transferred).
     */
   def transferSubtask(
-      spark: SparkSession,
-      source: graft.sources.DocConnector,
+      planned: DataFrame,
       sink: graft.sources.DocConnector,
       subtask: SubtaskSpec,
       sizeCol: Option[String],
@@ -136,8 +136,7 @@ object Transfer {
       worker: String = "driver",
       onProgress: Progress => Unit = _ => ()
   ): TableResult = {
-    val scanned = source.scan(spark, subtask.table)
-    val src = sizeCol.fold(scanned)(c => scanned.filter(sizeRangePred(subtask, c)))
+    val src = sizeCol.fold(planned)(c => planned.filter(sizeRangePred(subtask, c)))
     val mutated = MutatorPipeline.applyColumnar(src, pipeline.columnMutators)
     val dest = s"${subtask.table}/${subtaskDirName(subtask)}"
     val written = sink.bulk(mutated, dest)

@@ -41,9 +41,12 @@ import graft.engine.ResilientSink
   * Addressing uses query parameters (`?table=...`) rather than
   * path-embedded names so slice-qualified tables ("t/slice1") stay
   * URL-safe. Documents travel as JSON objects; `scan` rebuilds the
-  * DataFrame via JSON inference, which costs an extra pass — like the
-  * csv/json [[FormatConnector]], pass a schema-bearing format for the
-  * 100 TB steady state, or keep this connector for ingest/egress edges.
+  * DataFrame via JSON inference, one full scroll at scan time before any
+  * action runs. A reindex task calls `scan` once per table, at plan time,
+  * and reuses the frame ([[graft.Graft]]'s read budget): per table the
+  * plan scrolls the source 3× (inference, quantile, bucket stats) and
+  * each subtask scrolls it once more (its write). The schema-bearing
+  * overload below drops the inference scroll.
   *
   * Wire shapes (the stub server in ConnectorContractSpec speaks the
   * same):

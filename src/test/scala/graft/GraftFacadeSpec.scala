@@ -64,6 +64,37 @@ class GraftFacadeSpec extends SparkSpec {
     assert(g.mutators.list("job1").isEmpty)
   }
 
+  test("a parquet subtask runs exactly one Spark job: the planned frame is reused, not re-read") {
+    val g = new Graft(spark)
+    val dest = Files.createTempDirectory("graft_facade_jobs").toString
+    val spec = TaskSpec("jobs1", sourceDir = sf, destDir = dest, tables = Seq("lineitem"))
+    val backlog = g.addTask(spec, sizeCols = Map("lineitem" -> "l_extendedprice"))
+    assert(backlog.size == 3)
+    // count only the jobs of this task's run (the facade's job group)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(js.properties).exists(_.getProperty("spark.jobGroup.id") == "graft-task-jobs1"))
+          jobs.incrementAndGet(): Unit
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val results = g.runTask("jobs1")
+      assert(results.size == 3)
+      // listener delivery is async: wait until the count is stable
+      var last = -1
+      var stable = 0
+      val deadline = System.nanoTime() + 5000000000L
+      while (stable < 3 && System.nanoTime() < deadline) {
+        val now = jobs.get()
+        if (now == last) stable += 1 else { stable = 0; last = now }
+        Thread.sleep(100)
+      }
+      assert(jobs.get() == results.size,
+        s"each subtask must cost exactly its write job; saw ${jobs.get()} jobs for ${results.size}")
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   test("type-kind stored filters referenced by a task prune mapping types in metadata transfer (F2)") {
     val g = new Graft(spark)
     val dest = Files.createTempDirectory("graft_facade_types").toString

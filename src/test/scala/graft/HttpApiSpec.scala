@@ -3,6 +3,8 @@ package graft
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 
+import scala.jdk.CollectionConverters._
+
 import com.fasterxml.jackson.databind.ObjectMapper
 
 import graft.api.HttpApi
@@ -414,6 +416,58 @@ class HttpApiSpec extends SparkSpec {
         "a successful re-plan must clear lastPlanError")
       assert(!mapper.readTree(send("GET", s"$base/tasks/jobBad/_run").body()).has("lastPlanError"))
     } finally api.close()
+  }
+
+  test("a fatal error in async planning or a run is recorded, then rethrown to the thread") {
+    import org.apache.spark.sql.{DataFrame, SparkSession}
+    import graft.sources.DocConnector
+    val inner = new InMemoryConnector
+    inner.bulk((1 to 3).map(i => (i.toLong, i * 1.0)).toDF("id", "v"), "t"): Unit
+    val fatalPlan = new java.util.concurrent.atomic.AtomicBoolean(true)
+    val src = new DocConnector {
+      override def scan(spark: SparkSession, table: String): DataFrame =
+        if (fatalPlan.get) throw new LinkageError("fatal in planning") else inner.scan(spark, table)
+      override def bulk(df: DataFrame, table: String): Long = inner.bulk(df, table)
+      override def listTables(pattern: String): Seq[String] = inner.listTables(pattern)
+    }
+    val sink = new DocConnector {
+      override def scan(spark: SparkSession, table: String): DataFrame = inner.scan(spark, table)
+      override def bulk(df: DataFrame, table: String): Long = throw new LinkageError("fatal in run")
+      override def listTables(pattern: String): Seq[String] = Seq.empty
+    }
+    // the runnables' threads die with the error: collect what reaches
+    // the uncaught-exception handler
+    val uncaught = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val prevHandler = Thread.getDefaultUncaughtExceptionHandler
+    Thread.setDefaultUncaughtExceptionHandler((_, e) => uncaught.add(e): Unit)
+    val g = new Graft(spark, _ => (src, sink))
+    val api = new HttpApi(g).start()
+    val base = s"http://127.0.0.1:${api.boundPort}"
+    val body = """{"sourceDir": "mem://s", "destDir": "mem://d", "tables": ["t"]}"""
+    def awaitUncaught(msg: String): Unit = {
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!uncaught.asScala.exists(_.getMessage == msg) && System.nanoTime() < deadline)
+        Thread.sleep(50)
+      assert(uncaught.asScala.exists(_.getMessage == msg), s"'$msg' was swallowed: $uncaught")
+    }
+    try {
+      assert(send("POST", s"$base/tasks/jobFatal", body).statusCode() == 202)
+      awaitUncaught("fatal in planning")
+      val planned = mapper.readTree(send("GET", s"$base/tasks/jobFatal/_run").body())
+      assert(planned.get("state").asText() == "plan_failed")
+      assert(planned.get("error").asText().contains("fatal in planning"))
+
+      fatalPlan.set(false)
+      assert(addTaskAwait(base, "jobFatal", body) == 1)
+      assert(send("POST", s"$base/tasks/jobFatal/_run").statusCode() == 202)
+      awaitUncaught("fatal in run")
+      val run = pollRun(base, "jobFatal")
+      assert(run.get("state").asText() == "failed")
+      assert(run.get("error").asText().contains("fatal in run"))
+    } finally {
+      api.close()
+      Thread.setDefaultUncaughtExceptionHandler(prevHandler)
+    }
   }
 
   test("POST /maintenance/assets_increment: publishes the append's assets by increment; bad family is a 400") {

@@ -159,6 +159,76 @@ class WorkerE2ESpec extends SparkSpec {
     assert(g.status("task3").percentComplete == 100.0)
   }
 
+  /** Wraps a connector and counts `scan` calls per table. */
+  private final class CountingConnector(inner: DocConnector) extends DocConnector {
+    val scans = scala.collection.mutable.Map.empty[String, Int]
+    override def scan(spark: SparkSession, table: String): DataFrame = {
+      scans(table) = scans.getOrElse(table, 0) + 1
+      inner.scan(spark, table)
+    }
+    override def bulk(df: DataFrame, table: String): Long = inner.bulk(df, table)
+    override def listTables(pattern: String): Seq[String] = inner.listTables(pattern)
+  }
+
+  test("read budget: the source is scanned once per table per plan, never by a run") {
+    val src = new CountingConnector(seeded())
+    val sink = new InMemoryConnector
+    val g = new Graft(spark, _ => (src, sink))
+    val spec = TaskSpec("budget", "mem://s", "mem://d", Seq("first", "second"))
+    val sizeCols = Map("first" -> "id", "second" -> "id")
+    val planned = g.addTask(spec, sizeCols)
+    assert(planned.size > 2, s"need several subtasks per table: $planned")
+    assert(src.scans == Map("first" -> 1, "second" -> 1))
+
+    // stop after one subtask, then start and stop again after the next:
+    // the drains resume the backlog without touching the source
+    g.runTask("budget", onComplete = (_, _) => g.stop())
+    g.start()
+    g.runTask("budget", onComplete = (_, _) => g.stop())
+    assert(g.status("budget").completed == 2)
+    assert(src.scans == Map("first" -> 1, "second" -> 1))
+
+    // resume by re-adding: the replan scans each table once more, and
+    // its drain reads none
+    g.start()
+    val resumed = g.addTask(spec, sizeCols)
+    assert(resumed.size == planned.size - 2)
+    assert(src.scans == Map("first" -> 2, "second" -> 2))
+    g.runTask("budget")
+    assert(src.scans == Map("first" -> 2, "second" -> 2))
+    assert(g.status("budget").percentComplete == 100.0)
+    val written = sink.listTables("*").map(sink.count).sum
+    assert(written == 15L, s"every doc lands exactly once across slices: $written")
+  }
+
+  test("a planned frame is a snapshot; re-adding the task refreshes it") {
+    val src = seeded()
+    val sinks = Map("stale" -> new InMemoryConnector, "fresh" -> new InMemoryConnector)
+    val g = new Graft(spark, spec => (src, sinks(spec.name)))
+    val stale = TaskSpec("stale", "mem://s", "mem://d", Seq("first"))
+    val fresh = TaskSpec("fresh", "mem://s", "mem://d", Seq("first"))
+    g.addTask(stale)
+    g.addTask(fresh)
+    // the source gains a column after both plans
+    src.bulk((0 until 10).map(n => (n.toLong, s"data$n", n * 10)).toDF("id", "something", "added"),
+      "first")
+    g.addTask(fresh)
+    g.runTask("stale")
+    g.runTask("fresh")
+
+    def out(task: String): DataFrame = {
+      val sink = sinks(task)
+      val tables = sink.listTables("first/*")
+      assert(tables.size == 1)
+      sink.scan(spark, tables.head)
+    }
+    assert(out("stale").columns.toSeq == Seq("id", "something"),
+      "a run without a replan transfers the plan-time snapshot")
+    assert(out("fresh").columns.toSeq == Seq("id", "something", "added"),
+      "the replan must refresh the frame")
+    assert(out("fresh").agg(org.apache.spark.sql.functions.sum("added")).head().getLong(0) == 450L)
+  }
+
   test("stop() cancels the in-flight Spark job group (P7 interrupt)") {
     val src = seeded()
     // a sink whose bulk job parks its tasks: the only way runTask can
